@@ -1278,12 +1278,19 @@ def graph_summary(edges: DataFrame) -> DataFrame:
 
     Scale shape: one degree aggregate over the symmetric edge table +
     a one-row reduction; mean_degree = 2E/N is one division of exact
-    BIGINTs."""
+    BIGINTs. An empty edge table has no graph to summarize: the result
+    is typed and empty (no 0/0 mean)."""
+    ne = edges.count()
+    if ne == 0:
+        return edges.sparkSession.createDataFrame(
+            [],
+            "n_nodes bigint, n_edges bigint, max_degree bigint,"
+            " mean_degree double",
+        )
     sym = edges.select(F.col("a").alias("src")).unionByName(
         edges.select(F.col("b").alias("src"))
     )
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ne = edges.count()
     return deg.agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
         F.lit(ne).cast("long").alias("n_edges"),

@@ -2551,7 +2551,8 @@ WHERE s.size > 1
 
 def graph_summary_sql(sf: float) -> str:
     """One-row co-mention graph summary (mirror of rank.graph_summary):
-    same degree aggregate, 2E/N as the identical double division."""
+    same degree aggregate, 2E/N as the identical double division; no
+    row when the graph has no edges."""
     key = NORM.format(x="m.surface")
     return f"""
 WITH m AS ({mentions_sql(sf)}),
@@ -2569,4 +2570,5 @@ SELECT count(*)::BIGINT AS n_nodes,
        max(deg)::BIGINT AS max_degree,
        2.0 * (SELECT n FROM ne)::DOUBLE / count(*)::DOUBLE AS mean_degree
 FROM deg
+HAVING count(*) > 0
 """

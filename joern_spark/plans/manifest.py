@@ -33,6 +33,17 @@ from pyspark.sql import functions as F
 BUCKET_COL = "_bucket"
 
 
+def atomic_write_text(path: str, text: str) -> None:
+    """Replace `path` with `text` all at once: write a sibling temp file,
+    then rename it over `path`. A reader sees the old or the new content,
+    never a torn file — the commit primitive of the manifest, the
+    streaming snapshot pointers and the workspace registry."""
+    tmp = f"{path}.tmp{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
 class SimulatedKill(RuntimeError):
     """Raised by fault injection in tests to model a mid-job crash."""
 
@@ -79,11 +90,7 @@ class Manifest:
             return json.load(f)
 
     def commit(self, stage: str, bucket: int, row: dict) -> None:
-        p = self._path(stage, bucket)
-        tmp = p + f".tmp{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(row, f)
-        os.replace(tmp, p)
+        atomic_write_text(self._path(stage, bucket), json.dumps(row))
 
     def completed(self, stage: str) -> dict[int, dict]:
         out = {}
@@ -130,11 +137,7 @@ class StageRunner:
         """Persist the stage schema so empty stages (zero rows in every
         bucket) still read back typed instead of failing schema
         inference."""
-        p = self._schema_path(stage)
-        tmp = p + f".tmp{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(schema.json())
-        os.replace(tmp, p)
+        atomic_write_text(self._schema_path(stage), schema.json())
 
     def read_stage(self, stage: str) -> DataFrame:
         from pyspark.sql import types as T

@@ -16,7 +16,15 @@ import os
 from pyspark.sql import SparkSession
 
 
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM", "16g")
+def _default_driver_mem() -> str:
+    """min(16g, 60% of physical memory): the heap is fixed and pre-touched
+    (see get_spark), so a default larger than the host stops the JVM
+    before the gateway comes up."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, phys * 6 // 10 >> 20)}m"
+
+
+_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem())
 
 
 def default_parallelism() -> int:

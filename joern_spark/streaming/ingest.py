@@ -3,53 +3,91 @@
 The reference is batch-only (no watermarks/streaming anywhere — SURVEY.md
 §1.4), but a production transcript firehose arrives continuously. The
 extraction stage (S2) is per-turn stateless, so it streams unchanged:
-`readStream` over the landing directory → the SAME extract_* plans used
-in batch → append sink with checkpointing (exactly-once per epoch via
-the file-source offset log + sink commit log).
+`run_increment` reads the landing directory as a stream, runs the SAME
+extract_* plans used in batch and appends to a checkpointed parquet
+sink (exactly-once per epoch via the file-source offset log + sink
+commit log).
+
+The ten `run_*_increment` folds keep mergeable state instead — a
+canonical map, a flow walk, sketches, dedup bands, a lexical index,
+burst counts — and share two mechanisms defined here:
+
+  * ONE DRAIN. `drain` runs a streaming DataFrame under
+    Trigger.AvailableNow into a parquet append sink or a foreachBatch
+    function: each invocation processes exactly the files landed since
+    the checkpoint, then stops — the pattern for cron-scheduled
+    incremental jobs, with the checkpoint directory as the resume
+    manifest. `read_stream` is the one landing-directory reader, and
+    the stateful operators in `stateful.py` drain through it too.
+  * ONE SNAPSHOT STORE. A fold's state is a sequence of immutable
+    snapshot directories `<prefix>-<batch id>-<nonce>[/<table>]` behind
+    a pointer file (`_FOLDS` names each fold's prefix, pointer and
+    tables). `_commit` writes a snapshot's tables, then repoints the
+    pointer atomically (`atomic_write_text` — the Iceberg
+    metadata-pointer pattern at file-system scale), then expires
+    superseded snapshots (`expire_snapshots`, newest 3 kept). Readers
+    follow the pointer, so they never see a partial snapshot; a crash
+    before the pointer commit leaves a torn or orphaned directory that
+    no reader sees and the next commit sweeps.
+
+foreachBatch side effects are at-least-once under crash-rerun (the
+offset commit is separate), so every fold's own docstring says why its
+replay is harmless: either the merge is idempotent, or the fold skips a
+batch id ≤ the last folded one, which the pointed-to snapshot's name
+records.
 
 Conversation-level stages (window assembly, rebind resolution,
 canonicalization) need cross-turn state; they run as periodic batch
 compaction over the streamed raw tables — the classic lambda-free
-"stream the cheap 95%, batch the stateful 5%" split. `run_increment`
-uses Trigger.AvailableNow so each invocation drains exactly the new
-files then stops — the pattern for cron-scheduled incremental jobs.
+"stream the cheap 95%, batch the stateful 5%" split.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shutil
+import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from joern_spark import schemas as S
 from joern_spark.operators.extract import extract_triples_raw
-
-
-def read_transcript_stream(
-    spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = (
-        spark.readStream.format("parquet")
-        .schema(S.TRANSCRIPT_SCHEMA)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(landing_dir)
-
+from joern_spark.plans.manifest import atomic_write_text
 
 # The columns sessionization needs from an event landing table; extra
 # columns in a real lake table are pruned by the reader schema.
 EVENT_STREAM_SCHEMA = "event_id bigint, ts timestamp_ntz, user_id string"
 
+DOC_STREAM_SCHEMA = "doc_id bigint, text string, lang string, source string"
 
-def read_event_stream(
-    spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.format("parquet").schema(EVENT_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(landing_dir)
+
+def read_stream(spark: SparkSession, landing_dir: str, schema) -> DataFrame:
+    """The landing directory as a parquet file stream under a fixed
+    reader schema."""
+    return spark.readStream.format("parquet").schema(schema).load(landing_dir)
+
+
+def drain(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    sink: str | Callable[[DataFrame, int], None],
+) -> None:
+    """Run `stream` once under Trigger.AvailableNow: everything landed
+    since the checkpoint, then stop. `sink` is an output directory
+    (append-mode parquet file sink) or a foreachBatch function
+    `(batch_df, batch_id) -> None`."""
+    w = (
+        stream.writeStream.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    else:
+        w = w.format("parquet").option("path", sink).outputMode("append")
+    w.start().awaitTermination()
 
 
 def run_increment(
@@ -59,17 +97,8 @@ def run_increment(
     extraction into the raw-triples table, exactly once, then stop.
     Re-invoking after new files land processes only the delta (the
     file-source offset log under checkpoint_dir is the resume manifest)."""
-    stream = read_transcript_stream(spark, landing_dir)
-    triples = extract_triples_raw(stream)
-    q = (
-        triples.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = read_stream(spark, landing_dir, S.TRANSCRIPT_SCHEMA)
+    drain(extract_triples_raw(stream), checkpoint_dir, out_dir)
 
 
 def streamed_triples(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -80,39 +109,131 @@ def streamed_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     ).parquet(out_dir)
 
 
-# --- incremental entity resolution (canonical-map maintenance) ----------------
-
-_POINTER = "CURRENT"
+# --- the snapshot store -------------------------------------------------------
 
 
-def _commit_pointer(state_dir: str, snapshot_dir: str) -> None:
-    """Atomically repoint the map to a new snapshot (write-tmp + rename —
-    the Iceberg metadata-pointer pattern at file-system scale)."""
-    import uuid
+class _Fold(NamedTuple):
+    pointer: str
+    tables: tuple[str, ...] = ("",)  # "" = the snapshot dir is the table
 
-    p = os.path.join(state_dir, _POINTER)
-    tmp = p + f".tmp{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write(os.path.basename(snapshot_dir))
-    os.replace(tmp, p)
+
+# snapshot-name prefix → the fold's pointer file and snapshot tables
+_FOLDS = {
+    "cmap": _Fold("CURRENT"),
+    "walk": _Fold("CURRENT_WALK", ("paths", "edges", "seeds")),
+    "cm": _Fold("CURRENT_CM"),
+    "hll": _Fold("CURRENT_HLL"),
+    "bloom": _Fold("CURRENT_BLOOM"),
+    "hist": _Fold("CURRENT_HIST"),
+    "mix": _Fold("CURRENT_MIX"),
+    "dedup": _Fold("CURRENT_DEDUP", ("bands", "pairs")),
+    "tindex": _Fold("CURRENT_TINDEX", ("tf", "dl", "dfreq", "cf", "stats")),
+    "burst": _Fold("CURRENT_BURST"),
+}
+
+
+def _prefix(name: str) -> str:
+    return name.split("-")[0]
+
+
+def _batch_id(name: str) -> int:
+    # snapshot names embed the zero-padded batch id: <prefix>-<id>-<nonce>
+    return int(name.split("-")[1])
+
+
+def _pointer(state_dir: str, prefix: str) -> str | None:
+    """The snapshot the fold's pointer names, or None before its first
+    commit."""
+    p = os.path.join(state_dir, _FOLDS[prefix].pointer)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return f.read().strip()
+
+
+def _tables(spark: SparkSession, state_dir: str, name: str) -> tuple:
+    """The snapshot's tables, in the fold's `_FOLDS` order."""
+    return tuple(
+        spark.read.parquet(os.path.join(state_dir, name, t))
+        for t in _FOLDS[_prefix(name)].tables
+    )
+
+
+def _read_table(spark: SparkSession, state_dir: str, prefix: str):
+    """(committed table, last folded batch id) of a one-table fold, or
+    (None, -1) before its first commit."""
+    name = _pointer(state_dir, prefix)
+    if name is None:
+        return None, -1
+    return _tables(spark, state_dir, name)[0], _batch_id(name)
+
+
+def _snapshot_dirs(state_dir: str) -> list[str]:
+    """Every snapshot directory, committed or torn."""
+    if not os.path.isdir(state_dir):
+        return []
+    return [
+        n
+        for n in os.listdir(state_dir)
+        if re.fullmatch(r"[a-z]+-\d+-[0-9a-f]+", n)
+        and _prefix(n) in _FOLDS
+        and os.path.isdir(os.path.join(state_dir, n))
+    ]
 
 
 def _snapshots(state_dir: str) -> list[str]:
     """COMMITTED snapshot directory names, oldest first (names embed the
-    zero-padded batch id, so lexicographic order IS fold order). Only
-    dirs carrying Spark's _SUCCESS marker count — a crash mid-write
-    leaves a torn dir that time travel and retention must not see. Two
-    committed dirs for the same batch id (crash between write and
-    pointer commit, then replay) hold identical content by the fold's
-    idempotence; the lexicographically last wins deterministically."""
-    if not os.path.isdir(state_dir):
-        return []
+    zero-padded batch id, so lexicographic order IS fold order within a
+    fold). Only dirs whose every table carries Spark's _SUCCESS marker
+    count — a crash mid-write leaves a torn dir that time travel and
+    retention must not see. Two committed dirs for the same batch id
+    (crash between write and pointer commit, then replay) hold identical
+    content by the fold's idempotence or replay guard; the
+    lexicographically last wins deterministically."""
     return sorted(
         n
-        for n in os.listdir(state_dir)
-        if n.startswith("cmap-")
-        and os.path.exists(os.path.join(state_dir, n, "_SUCCESS"))
+        for n in _snapshot_dirs(state_dir)
+        if all(
+            os.path.exists(os.path.join(state_dir, n, t, "_SUCCESS"))
+            for t in _FOLDS[_prefix(n)].tables
+        )
     )
+
+
+def expire_snapshots(state_dir: str, keep_last: int = 3) -> list[str]:
+    """Retention GC, per fold: delete all but the newest `keep_last`
+    committed snapshots, never the one the fold's pointer references
+    (the Iceberg expire_snapshots analog). Torn snapshot dirs (no
+    _SUCCESS marker — a crash mid-write) are always garbage-collected
+    and never count toward keep_last. Every commit runs it with the
+    default; returns the deleted directory names."""
+    dirs = sorted(_snapshot_dirs(state_dir))
+    committed = _snapshots(state_dir)
+    doomed = []
+    for prefix in sorted({_prefix(n) for n in dirs}):
+        mine = [n for n in committed if _prefix(n) == prefix]
+        keep = set(mine[-keep_last:] if keep_last else [])
+        keep.add(_pointer(state_dir, prefix))
+        doomed += [n for n in dirs if _prefix(n) == prefix and n not in keep]
+    for n in doomed:
+        shutil.rmtree(os.path.join(state_dir, n), ignore_errors=True)
+    return doomed
+
+
+def _commit(
+    state_dir: str, prefix: str, batch_id: int, *tables: DataFrame
+) -> None:
+    """Write a new snapshot of the fold's tables, atomically repoint the
+    fold at it, then expire superseded snapshots."""
+    fold = _FOLDS[prefix]
+    name = f"{prefix}-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
+    for t, df in zip(fold.tables, tables, strict=True):
+        df.write.mode("overwrite").parquet(os.path.join(state_dir, name, t))
+    atomic_write_text(os.path.join(state_dir, fold.pointer), name)
+    expire_snapshots(state_dir)
+
+
+# --- incremental entity resolution (canonical-map maintenance) ----------------
 
 
 def read_canonical_map(
@@ -121,58 +242,22 @@ def read_canonical_map(
     """The current canonical-map snapshot, or None before the first fold.
 
     `as_of_batch` reads the LAST snapshot whose fold batch id is ≤ the
-    given id — time travel over the immutable snapshot history, the
+    given id — time travel over the retained snapshot history, the
     Iceberg snapshot-read analog (each fold is a commit; the pointer
     file is the metadata pointer)."""
-    if as_of_batch is not None:
+    if as_of_batch is None:
+        name = _pointer(state_dir, "cmap")
+    else:
         cands = [
             n for n in _snapshots(state_dir)
-            if int(n.split("-")[1]) <= as_of_batch
+            if _prefix(n) == "cmap" and _batch_id(n) <= as_of_batch
         ]
-        if not cands:
-            return None
-        name = cands[-1]
-    else:
-        p = os.path.join(state_dir, _POINTER)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            name = f.read().strip()
+        name = cands[-1] if cands else None
+    if name is None:
+        return None
     return spark.read.schema("entity_key string, canon string").parquet(
         os.path.join(state_dir, name)
     )
-
-
-def expire_snapshots(state_dir: str, keep_last: int = 3) -> list[str]:
-    """Retention GC: delete all but the newest `keep_last` committed
-    snapshots, never the one the pointer references (the Iceberg
-    expire_snapshots analog). Torn snapshot dirs (no _SUCCESS marker —
-    a crash mid-write) are always garbage-collected and never count
-    toward keep_last. Returns the deleted directory names."""
-    import shutil
-
-    p = os.path.join(state_dir, _POINTER)
-    current = None
-    if os.path.exists(p):
-        with open(p) as f:
-            current = f.read().strip()
-    committed = _snapshots(state_dir)
-    torn = [
-        n
-        for n in os.listdir(state_dir)
-        if os.path.isdir(os.path.join(state_dir, n))
-        and n.startswith("cmap-")
-        and n not in committed
-        and n != current
-    ] if os.path.isdir(state_dir) else []
-    doomed = torn + (
-        [n for n in committed[:-keep_last] if n != current]
-        if keep_last
-        else [n for n in committed if n != current]
-    )
-    for n in doomed:
-        shutil.rmtree(os.path.join(state_dir, n), ignore_errors=True)
-    return doomed
 
 
 def run_alias_increment(
@@ -182,23 +267,17 @@ def run_alias_increment(
     and fold their SAME_AS pairs into the persisted canonical map via
     `canonicalize.merge_canonical_map` — only components touched by the
     delta are re-solved, the historical pair set is never replayed.
-    Snapshots are immutable directories behind an atomically-replaced
-    pointer file (readers never observe a partial map).
 
     Exactly-once note: foreachBatch side effects are at-least-once under
     crash-rerun (the offset commit is separate), but the fold is
     IDEMPOTENT — merging pairs already present in the map is a no-op by
     the merge==one-shot theorem (tested) — so at-least-once delivery
     still converges to the exact batch answer."""
-    import uuid
-
     from joern_spark.operators.canonicalize import (
         connected_components,
         merge_canonical_map,
         same_as_pairs,
     )
-
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         pairs = same_as_pairs(batch_df).localCheckpoint(eager=True)
@@ -210,42 +289,15 @@ def run_alias_increment(
             if cur is not None
             else connected_components(pairs)
         )
-        snap = os.path.join(
-            state_dir, f"cmap-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        _commit_pointer(state_dir, snap)
+        _commit(state_dir, "cmap", batch_id, merged)
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_stream(spark, landing_dir, S.TRANSCRIPT_SCHEMA), checkpoint_dir, fold)
 
 
 # ---------------------------------------------------------------------------
 # Streaming flow-walk increments: fold newly-landed conversations into a
 # persisted keep='all' walk via hetero.incremental_paths — the streaming
-# twin of the workspace flow cache (the same snapshot-behind-a-pointer
-# discipline as the canonical-map increments above).
-
-_WALK_POINTER = "CURRENT_WALK"
-
-
-def _walk_snapshots(state_dir: str) -> list[str]:
-    if not os.path.isdir(state_dir):
-        return []
-    return sorted(
-        n
-        for n in os.listdir(state_dir)
-        if n.startswith("walk-")
-        and os.path.exists(os.path.join(state_dir, n, "paths", "_SUCCESS"))
-        and os.path.exists(os.path.join(state_dir, n, "edges", "_SUCCESS"))
-        and os.path.exists(os.path.join(state_dir, n, "seeds", "_SUCCESS"))
-    )
+# twin of the workspace flow cache.
 
 
 def read_walk(
@@ -253,21 +305,8 @@ def read_walk(
 ) -> "tuple[DataFrame, DataFrame, DataFrame] | None":
     """(paths, edges, seeds) of the current walk snapshot, or None before
     the first fold."""
-    p = os.path.join(state_dir, _WALK_POINTER)
-    if os.path.exists(p):
-        with open(p) as f:
-            name = f.read().strip()
-    else:
-        snaps = _walk_snapshots(state_dir)
-        if not snaps:
-            return None
-        name = snaps[-1]
-    base = os.path.join(state_dir, name)
-    return (
-        spark.read.parquet(os.path.join(base, "paths")),
-        spark.read.parquet(os.path.join(base, "edges")),
-        spark.read.parquet(os.path.join(base, "seeds")),
-    )
+    name = _pointer(state_dir, "walk")
+    return None if name is None else _tables(spark, state_dir, name)
 
 
 def run_walk_increment(
@@ -284,29 +323,21 @@ def run_walk_increment(
     conversations, the queries.hetero_edges_from contract), and fold it
     into the persisted keep='all' walk with hetero.incremental_paths —
     only the seeds whose cached paths touch a delta endpoint re-walk;
-    the historical path set is never replayed.
+    the historical path set is never replayed. A snapshot holds three
+    tables: paths, edges and seeds.
 
-    Snapshots are immutable dirs (`walk-<batch>-<uuid>/{paths,edges,
-    seeds}`) behind an atomically-replaced pointer. At-least-once
-    replay is idempotent: a replayed batch's edges anti-join away
-    against the accumulated edge table, leaving an empty delta, and
-    incremental_paths with an empty delta is a pure cache filter
-    (tested)."""
-    import uuid
-
+    At-least-once replay is idempotent: a replayed batch's edges
+    anti-join away against the accumulated edge table, leaving an empty
+    delta, and incremental_paths with an empty delta is a pure cache
+    filter (tested)."""
     from joern_spark.functions.hetero import (
         expand_paths_hetero,
         incremental_paths,
     )
-    from joern_spark.operators.extract import (
-        extract_mentions,
-        extract_triples_raw,
-    )
+    from joern_spark.operators.extract import extract_mentions
     from joern_spark.operators.link import link_mentions
     from joern_spark.queries import hetero_edges_from
     from joern_spark.sources.transcripts import read_entities
-
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -348,48 +379,22 @@ def run_walk_increment(
                 prev_paths, edges_all, new_delta, seeds_all,
                 max_depth=max_depth, max_crossings=max_crossings,
             )
-        snap = os.path.join(
-            state_dir, f"walk-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        paths.write.mode("overwrite").parquet(os.path.join(snap, "paths"))
-        edges_all.write.mode("overwrite").parquet(os.path.join(snap, "edges"))
-        seeds_all.write.mode("overwrite").parquet(os.path.join(snap, "seeds"))
-        tmp = os.path.join(state_dir, _WALK_POINTER + f".tmp{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _WALK_POINTER))
+        _commit(state_dir, "walk", batch_id, paths, edges_all, seeds_all)
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_stream(spark, landing_dir, S.TRANSCRIPT_SCHEMA), checkpoint_dir, fold)
 
 
 # ---------------------------------------------------------------------------
 # Streaming Count-Min increments: sketch each newly-landed micro-batch
 # independently and cell-wise sum it into a persisted cell table —
 # cm_merge associativity makes the fold of per-batch sketches equal the
-# one-shot sketch (proven in tests/test_sketch.py). Same
-# snapshot-behind-a-pointer discipline as the canonical-map increments.
-
-_CM_POINTER = "CURRENT_CM"
+# one-shot sketch (proven in tests/test_sketch.py).
 
 
 def read_cm_sketch(spark: SparkSession, state_dir: str):
     """The currently-committed cell table (r, bucket, c), or None before
     the first drain. Returns (DataFrame | None, last_folded_batch_id)."""
-    p = os.path.join(state_dir, _CM_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    # snapshot names embed the zero-padded batch id: cm-<id>-<nonce>
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "cm")
 
 
 def run_cm_increment(
@@ -404,16 +409,11 @@ def run_cm_increment(
     and unlike the canonical-map fold a cell-wise SUM is NOT idempotent —
     so the fold carries the standard batch-id guard: the committed
     snapshot name embeds the last folded batch id, and a replayed batch
-    id ≤ that is skipped. Crash-between-write-and-pointer replays
-    rewrite the same batch's snapshot (same inputs, same cells) before
-    committing the pointer, so readers converge to the exact batch
-    answer either way."""
-    import uuid
-
-    from joern_spark.operators.extract import extract_triples_raw
+    id ≤ that is skipped. Crash-between-write-and-pointer
+    replays rewrite the same batch's snapshot (same inputs, same cells)
+    before committing the pointer, so readers converge to the exact
+    batch answer either way."""
     from joern_spark.operators.sketch import cm_merge, cm_sketch
-
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, last_id = read_cm_sketch(spark, state_dir)
@@ -426,40 +426,15 @@ def run_cm_increment(
         if delta.isEmpty():
             return
         merged = cm_merge(cur, delta) if cur is not None else delta
-        snap = os.path.join(
-            state_dir, f"cm-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _CM_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _CM_POINTER))
+        _commit(state_dir, "cm", batch_id, merged)
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_HLL_POINTER = "CURRENT_HLL"
+    drain(read_stream(spark, landing_dir, S.TRANSCRIPT_SCHEMA), checkpoint_dir, fold)
 
 
 def read_hll_registers(spark: SparkSession, state_dir: str):
     """The currently-committed HLL register table (bucket, m), or None
     before the first drain. Returns (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _HLL_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "hll")
 
 
 def run_hll_increment(
@@ -475,12 +450,7 @@ def run_hll_increment(
     contract re-folds the same registers to the same table, so no
     batch-id replay guard is needed for correctness; the snapshot name
     still embeds the batch id so readers can see stream progress."""
-    import uuid
-
-    from joern_spark.operators.extract import extract_triples_raw
     from joern_spark.operators.sketch import hll_merge, hll_registers
-
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, _ = read_hll_registers(spark, state_dir)
@@ -491,40 +461,15 @@ def run_hll_increment(
         if delta.isEmpty():
             return
         merged = hll_merge(cur, delta) if cur is not None else delta
-        snap = os.path.join(
-            state_dir, f"hll-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _HLL_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _HLL_POINTER))
+        _commit(state_dir, "hll", batch_id, merged)
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_BLOOM_POINTER = "CURRENT_BLOOM"
+    drain(read_stream(spark, landing_dir, S.TRANSCRIPT_SCHEMA), checkpoint_dir, fold)
 
 
 def read_bloom_bits(spark: SparkSession, state_dir: str):
     """The currently-committed Bloom bit table (bit,), or None before
     the first drain. Returns (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _BLOOM_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "bloom")
 
 
 def run_bloom_increment(
@@ -542,12 +487,7 @@ def run_bloom_increment(
     readers can see stream progress. The committed table is ≤ BLOOM_M
     rows regardless of how many batches folded into it, so the snapshot
     write never grows with stream history."""
-    import uuid
-
-    from joern_spark.operators.extract import extract_triples_raw
     from joern_spark.operators.sketch import bloom_bits, bloom_merge
-
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, _ = read_bloom_bits(spark, state_dir)
@@ -558,40 +498,15 @@ def run_bloom_increment(
         if delta.isEmpty():
             return
         merged = bloom_merge(cur, delta) if cur is not None else delta
-        snap = os.path.join(
-            state_dir, f"bloom-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _BLOOM_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _BLOOM_POINTER))
+        _commit(state_dir, "bloom", batch_id, merged)
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_HIST_POINTER = "CURRENT_HIST"
+    drain(read_stream(spark, landing_dir, S.TRANSCRIPT_SCHEMA), checkpoint_dir, fold)
 
 
 def read_hist_registers(spark: SparkSession, state_dir: str):
     """The currently-committed histogram table (bucket, cnt), or None
     before the first drain. Returns (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _HIST_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "hist")
 
 
 def run_hist_increment(
@@ -609,12 +524,8 @@ def run_hist_increment(
     carries the standard batch-id guard: the committed snapshot name
     embeds the last folded batch id, and a replayed batch id ≤ that is
     skipped."""
-    import uuid
-
     from joern_spark.functions.hashing import tokens_col
     from joern_spark.operators.sketch import hist_merge, hist_registers
-
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, last_id = read_hist_registers(spark, state_dir)
@@ -627,53 +538,16 @@ def run_hist_increment(
         if delta.isEmpty():
             return
         merged = hist_merge(cur, delta) if cur is not None else delta
-        snap = os.path.join(
-            state_dir, f"hist-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _HIST_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _HIST_POINTER))
+        _commit(state_dir, "hist", batch_id, merged)
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-DOC_STREAM_SCHEMA = "doc_id bigint, text string, lang string, source string"
-
-
-def read_document_stream(
-    spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.format("parquet").schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(landing_dir)
-
-
-_MIX_POINTER = "CURRENT_MIX"
+    drain(read_stream(spark, landing_dir, S.TRANSCRIPT_SCHEMA), checkpoint_dir, fold)
 
 
 def read_mix_counts(spark: SparkSession, state_dir: str):
     """The currently-committed per-source (n_docs, n_tokens) count
     table, or None before the first drain. Returns
     (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _MIX_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "mix")
 
 
 def run_mix_increment(
@@ -690,11 +564,7 @@ def run_mix_increment(
     standard batch-id guard (the committed snapshot name embeds the last
     folded batch id; a replayed batch id ≤ that is skipped) — the same
     discipline as the Count-Min and histogram folds."""
-    import uuid
-
     from joern_spark.functions.hashing import tokens_col
-
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, last_id = read_mix_counts(spark, state_dir)
@@ -723,43 +593,16 @@ def run_mix_increment(
             )
         else:
             merged = delta
-        snap = os.path.join(
-            state_dir, f"mix-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _MIX_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _MIX_POINTER))
+        _commit(state_dir, "mix", batch_id, merged)
 
-    stream = read_document_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_DEDUP_POINTER = "CURRENT_DEDUP"
+    drain(read_stream(spark, landing_dir, DOC_STREAM_SCHEMA), checkpoint_dir, fold)
 
 
 def read_dedup_state(spark: SparkSession, state_dir: str):
     """The committed (bands, pairs) tables of the incremental MinHash
     dedup, or (None, None) before the first drain."""
-    p = os.path.join(state_dir, _DEDUP_POINTER)
-    if not os.path.exists(p):
-        return None, None
-    with open(p) as f:
-        name = f.read().strip()
-    base = os.path.join(state_dir, name)
-    return (
-        spark.read.parquet(os.path.join(base, "bands")),
-        spark.read.parquet(os.path.join(base, "pairs")),
-    )
+    name = _pointer(state_dir, "dedup")
+    return (None, None) if name is None else _tables(spark, state_dir, name)
 
 
 def run_dedup_increment(
@@ -780,10 +623,7 @@ def run_dedup_increment(
     Exactly-once note: band rows are deterministic per doc and pairs
     dedup on (a, b), so both folds are idempotent under at-least-once
     replay — no batch-id guard needed (the HLL/Bloom discipline, not
-    the Count-Min one). Snapshots are immutable `dedup-*` dirs behind
-    an atomically-replaced pointer (the canonical-map discipline)."""
-    import uuid
-
+    the Count-Min one)."""
     from joern_spark.operators.dedup import (
         JACCARD_THRESHOLD,
         N_BANDS,
@@ -793,7 +633,6 @@ def run_dedup_increment(
         shingles,
     )
 
-    os.makedirs(state_dir, exist_ok=True)
     rows_per_band = N_MINHASH // N_BANDS
 
     def band_table(docs: DataFrame) -> DataFrame:
@@ -856,33 +695,9 @@ def run_dedup_increment(
             if old_pairs is not None
             else new_pairs
         )
-        snap = os.path.join(
-            state_dir, f"dedup-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged_bands.write.mode("overwrite").parquet(
-            os.path.join(snap, "bands")
-        )
-        merged_pairs.write.mode("overwrite").parquet(
-            os.path.join(snap, "pairs")
-        )
-        tmp = os.path.join(
-            state_dir, _DEDUP_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _DEDUP_POINTER))
+        _commit(state_dir, "dedup", batch_id, merged_bands, merged_pairs)
 
-    stream = read_document_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_TINDEX_POINTER = "CURRENT_TINDEX"
+    drain(read_stream(spark, landing_dir, DOC_STREAM_SCHEMA), checkpoint_dir, fold)
 
 
 def read_text_index(spark: SparkSession, state_dir: str):
@@ -890,20 +705,13 @@ def read_text_index(spark: SparkSession, state_dir: str):
     `textstats.load_text_index` returns (usable directly by
     `bm25_topk_indexed` / `qld_topk_indexed`), or None before the
     first drain."""
-    p = os.path.join(state_dir, _TINDEX_POINTER)
-    if not os.path.exists(p):
+    name = _pointer(state_dir, "tindex")
+    if name is None:
         return None
-    with open(p) as f:
-        name = f.read().strip()
-    base = os.path.join(state_dir, name)
-    return {
-        "tf": spark.read.parquet(os.path.join(base, "tf")),
-        "dl": spark.read.parquet(os.path.join(base, "dl")),
-        "dfreq": spark.read.parquet(os.path.join(base, "dfreq")),
-        "cf": spark.read.parquet(os.path.join(base, "cf")),
-        "stats": spark.read.parquet(os.path.join(base, "stats")),
-        "meta": {"snapshot": name},
-    }
+    return dict(
+        zip(_FOLDS["tindex"].tables, _tables(spark, state_dir, name)),
+        meta={"snapshot": name},
+    )
 
 
 def run_index_increment(
@@ -921,13 +729,8 @@ def run_index_increment(
     Exactly-once: the delta anti-joins the committed dl's doc ids, so
     an at-least-once replay folds an EMPTY delta — idempotent without
     a batch-id guard (the Bloom/HLL discipline; doc ids are the
-    natural dedup key). Snapshots are immutable `tindex-*` dirs behind
-    an atomically-replaced pointer."""
-    import uuid
-
+    natural dedup key)."""
     from joern_spark.operators.textstats import _tf_table
-
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur = read_text_index(spark, state_dir)
@@ -978,44 +781,15 @@ def run_index_increment(
             ).alias("avgdl"),
             "c_tot",
         )
-        snap = os.path.join(
-            state_dir, f"tindex-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        tf_m.write.mode("overwrite").parquet(os.path.join(snap, "tf"))
-        dl_m.write.mode("overwrite").parquet(os.path.join(snap, "dl"))
-        df_m.write.mode("overwrite").parquet(os.path.join(snap, "dfreq"))
-        cf_m.write.mode("overwrite").parquet(os.path.join(snap, "cf"))
-        st_m.write.mode("overwrite").parquet(os.path.join(snap, "stats"))
-        tmp = os.path.join(
-            state_dir, _TINDEX_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _TINDEX_POINTER))
+        _commit(state_dir, "tindex", batch_id, tf_m, dl_m, df_m, cf_m, st_m)
 
-    stream = read_document_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_BURST_POINTER = "CURRENT_BURST"
+    drain(read_stream(spark, landing_dir, DOC_STREAM_SCHEMA), checkpoint_dir, fold)
 
 
 def read_burst_counts(spark: SparkSession, state_dir: str):
     """The committed per-(entity, hour) mention-count table, or None.
     Returns (DataFrame | None, last batch id)."""
-    p = os.path.join(state_dir, _BURST_POINTER)
-    if not os.path.exists(p):
-        return None, -1
-    with open(p) as f:
-        name = f.read().strip()
-    batch_id = int(name.split("-")[1])
-    return spark.read.parquet(os.path.join(state_dir, name)), batch_id
+    return _read_table(spark, state_dir, "burst")
 
 
 def burst_hours_from_counts(counts: DataFrame) -> DataFrame:
@@ -1057,12 +831,8 @@ def run_burst_increment(
     moves, exactly like the batch operator). Sums are not idempotent →
     the Count-Min batch-id replay guard. State is vocabulary ×
     corpus-hours cells — dimension-sized forever."""
-    import uuid
-
     from joern_spark.operators.extract import extract_mentions
     from joern_spark.operators.link import keyed_mentions
-
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cur, last_id = read_burst_counts(spark, state_dir)
@@ -1089,22 +859,6 @@ def run_burst_increment(
             if cur is not None
             else delta
         )
-        snap = os.path.join(
-            state_dir, f"burst-{batch_id:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(snap)
-        tmp = os.path.join(
-            state_dir, _BURST_POINTER + f".tmp{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(snap))
-        os.replace(tmp, os.path.join(state_dir, _BURST_POINTER))
+        _commit(state_dir, "burst", batch_id, merged)
 
-    stream = read_transcript_stream(spark, landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_stream(spark, landing_dir, S.TRANSCRIPT_SCHEMA), checkpoint_dir, fold)

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from joern_spark.console import VIEWS, register_views
 from joern_spark.pipeline import GraphResult, run_pipeline
+from joern_spark.plans.manifest import atomic_write_text
 
 ACTIVE_PREFIX = "tpg_"
 _NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -226,7 +227,7 @@ class Workspace:
             )
             caches = manifest.setdefault("_flow_cache", {})
             caches[key] = str(cache_dir)
-            self.path.write_text(json.dumps(manifest, indent=1))
+            atomic_write_text(str(self.path), json.dumps(manifest, indent=1))
             return self.spark.read.parquet(str(cache_dir)), False
         return walk, False
 
@@ -303,4 +304,4 @@ class Workspace:
                     if k.startswith("_")
                 }
             meta.update({p.name: p.sf_dir for p in self.projects})
-            self.path.write_text(json.dumps(meta, indent=1))
+            atomic_write_text(str(self.path), json.dumps(meta, indent=1))

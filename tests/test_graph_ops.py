@@ -663,3 +663,18 @@ def test_ddg_backward_slice_diamond_and_chain(spark):
         # chain: def at 2, then the def at 0 that fed it
         ("lin", 3, 1, 2), ("lin", 3, 2, 0),
     }
+
+
+def test_graph_summary_counts_and_empty_edges(spark):
+    """The one-row summary of a path a-b-c, and a typed EMPTY result for
+    an edge-less graph: no row, so no 0/0 mean_degree."""
+    from joern_spark.operators.rank import graph_summary
+
+    got = graph_summary(pairs_df(spark, [("a", "b"), ("b", "c")])).collect()
+    assert [tuple(r) for r in got] == [(3, 2, 2, 4.0 / 3.0)]
+    empty = graph_summary(pairs_df(spark, []))
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<n_nodes:bigint,n_edges:bigint,max_degree:bigint,"
+        "mean_degree:double>"
+    )

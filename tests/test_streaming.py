@@ -389,6 +389,25 @@ def test_alias_increment_matches_batch(spark, tmp_path_factory):
     }
     assert still == got2
 
+    # one more committing drain: retention keeps at most 3 snapshots
+    _land_rows(
+        spark,
+        landing,
+        [
+            (
+                "zz_custom2",
+                0,
+                "user",
+                "Note that Oslo is also known as Tiger Town.",
+                None,
+                dt.datetime(2024, 6, 2),
+            )
+        ],
+        "a4",
+    )
+    ingest.run_alias_increment(spark, landing, state, ckpt)
+    assert len(ingest._snapshots(state)) <= 3
+
 
 def test_faithfulness_stream_across_drains_and_batch_parity(
     spark, tmp_path_factory
@@ -505,6 +524,11 @@ def test_walk_increment_stream_equals_batch(spark, tmp_path):
     assert want.exceptAll(paths).count() == 0
     assert paths.count() > n1
 
+    # one more committing drain: retention keeps at most 3 snapshots
+    land(80, 120, "b3")
+    ingest.run_walk_increment(spark, d["landing"], d["state"], d["ckpt"])
+    assert len(ingest._snapshots(d["state"])) <= 3
+
 
 def test_cm_increment_equals_batch_sketch(spark, tmp_path_factory):
     """Streaming Count-Min maintenance: two drains' folded cell table
@@ -546,6 +570,11 @@ def test_cm_increment_equals_batch_sketch(spark, tmp_path_factory):
     got = {(r.r, r.bucket): r.c for r in folded.collect()}
     assert got == expect
 
+    # one more committing drain: retention keeps at most 3 snapshots
+    _land(spark, d, 120, 180, "batch3")
+    ingest.run_cm_increment(spark, d["landing"], d["state"], d["ckpt"])
+    assert len(ingest._snapshots(d["state"])) <= 3
+
 
 def test_hll_increment_equals_batch_registers(spark, tmp_path_factory):
     """Streaming HLL maintenance: folded registers equal the ONE-SHOT
@@ -585,6 +614,11 @@ def test_hll_increment_equals_batch_registers(spark, tmp_path_factory):
         r.bucket: r.m for r in hll_merge(folded, folded).collect()
     }
     assert refolded == expect
+
+    # one more committing drain: retention keeps at most 3 snapshots
+    _land(spark, d, 120, 180, "batch3")
+    ingest.run_hll_increment(spark, d["landing"], d["state"], d["ckpt"])
+    assert len(ingest._snapshots(d["state"])) <= 3
 
 
 def test_bloom_increment_equals_batch_bits(spark, tmp_path_factory):
@@ -635,6 +669,11 @@ def test_bloom_increment_equals_batch_bits(spark, tmp_path_factory):
     refolded = {r.bit for r in bloom_merge(folded, folded).collect()}
     assert refolded == expect
 
+    # one more committing drain: retention keeps at most 3 snapshots
+    _land(spark, d, 120, 180, "batch3")
+    ingest.run_bloom_increment(spark, d["landing"], d["state"], d["ckpt"])
+    assert len(ingest._snapshots(d["state"])) <= 3
+
 
 def test_hist_increment_equals_batch_registers(spark, tmp_path_factory):
     """Streaming histogram maintenance: the folded bucket table equals
@@ -683,6 +722,11 @@ def test_hist_increment_equals_batch_registers(spark, tmp_path_factory):
         for r in hist_quantiles(hist_registers(vals), [0.5, 0.9]).collect()
     }
     assert sq == bq
+
+    # one more committing drain: retention keeps at most 3 snapshots
+    _land(spark, d, 120, 180, "batch3")
+    ingest.run_hist_increment(spark, d["landing"], d["state"], d["ckpt"])
+    assert len(ingest._snapshots(d["state"])) <= 3
 
 
 def test_mix_increment_equals_batch_mixture(spark, tmp_path_factory):
@@ -746,6 +790,11 @@ def test_mix_increment_equals_batch_mixture(spark, tmp_path_factory):
         assert stream_w[s][:2] == batch_w[s][:2]
         assert math.isclose(stream_w[s][2], batch_w[s][2], rel_tol=1e-12)
 
+    # one more committing drain: retention keeps at most 3 snapshots
+    land(100, 140, "batch3")
+    ingest.run_mix_increment(spark, d["landing"], d["state"], d["ckpt"])
+    assert len(ingest._snapshots(d["state"])) <= 3
+
 
 def test_dedup_increment_equals_batch_pairs(spark, tmp_path_factory):
     """Incremental MinHash-LSH dedup: after two drains the committed
@@ -807,6 +856,11 @@ def test_dedup_increment_equals_batch_pairs(spark, tmp_path_factory):
     # cross-batch pair present: doc 0 (batch 1) with doc 30+ (batch 2)
     assert any(a < 30 <= b for a, b in got)
 
+    # one more committing drain: retention keeps at most 3 snapshots
+    land(60, 90, "batch3")
+    ingest.run_dedup_increment(spark, d["landing"], d["state"], d["ckpt"])
+    assert len(ingest._snapshots(d["state"])) <= 3
+
 
 def test_index_increment_equals_batch_index(spark, tmp_path_factory):
     """Incremental inverted-index maintenance: after two drains the
@@ -866,6 +920,11 @@ def test_index_increment_equals_batch_index(spark, tmp_path_factory):
         b = {(r.query_id, r.doc_id): (r.score, r.rank) for r in indexed.collect()}
         assert a == b and a
 
+    # one more committing drain: retention keeps at most 3 snapshots
+    land(30, 45, "batch3")
+    ingest.run_index_increment(spark, d["landing"], d["state"], d["ckpt"])
+    assert len(ingest._snapshots(d["state"])) <= 3
+
 
 def test_burst_increment_equals_batch_bursts(spark, tmp_path_factory):
     """Streaming burst maintenance: after two drains, burst hours
@@ -906,3 +965,122 @@ def test_burst_increment_equals_batch_bursts(spark, tmp_path_factory):
         for r in entity_bursts(corpus, extract_mentions(corpus)).collect()
     }
     assert stream_bursts == batch_bursts and batch_bursts
+
+    # one more committing drain: retention keeps at most 3 snapshots
+    _land(spark, d, 120, 180, "batch3")
+    ingest.run_burst_increment(spark, d["landing"], d["state"], d["ckpt"])
+    assert len(ingest._snapshots(d["state"])) <= 3
+
+
+def _land_docs(spark, landing, lo, hi, name):
+    """Documents lo..hi-1; every 5th repeats one text (near-dup family)."""
+    import glob
+    import shutil
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [
+        (i, base if i % 5 == 0 else f"{base} unique{i} tail{i * 7}", "en",
+         f"s{i % 3}")
+        for i in range(lo, hi)
+    ]
+    staging = f"{landing}/../_stage_{name}"
+    spark.createDataFrame(rows, ingest.DOC_STREAM_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(staging)
+    for i, f in enumerate(sorted(glob.glob(f"{staging}/part-*.parquet"))):
+        shutil.move(f, f"{landing}/{name}_{i}.parquet")
+    shutil.rmtree(staging)
+
+
+def _state_rows(got):
+    """A reader's answer as sorted row reprs per table, without batch ids
+    or snapshot names (those differ between drain histories)."""
+    from pyspark.sql import DataFrame
+
+    if isinstance(got, dict):
+        got = [v for k, v in got.items() if k != "meta"]
+    elif isinstance(got, DataFrame):
+        got = [got]
+    elif isinstance(got[-1], int):  # (table, last folded batch id)
+        got = got[:1]
+    return [sorted(repr(tuple(r)) for r in df.collect()) for df in got]
+
+
+# (snapshot prefix, fold, reader, landing kind) for all ten folds
+_FOLD_CASES = [
+    ("cmap", "run_alias_increment", "read_canonical_map", "turns"),
+    ("walk", "run_walk_increment", "read_walk", "turns"),
+    ("cm", "run_cm_increment", "read_cm_sketch", "turns"),
+    ("hll", "run_hll_increment", "read_hll_registers", "turns"),
+    ("bloom", "run_bloom_increment", "read_bloom_bits", "turns"),
+    ("hist", "run_hist_increment", "read_hist_registers", "turns"),
+    ("mix", "run_mix_increment", "read_mix_counts", "docs"),
+    ("dedup", "run_dedup_increment", "read_dedup_state", "docs"),
+    ("tindex", "run_index_increment", "read_text_index", "docs"),
+    ("burst", "run_burst_increment", "read_burst_counts", "turns"),
+]
+
+
+@pytest.mark.parametrize(
+    "prefix,run,read,kind", _FOLD_CASES, ids=[c[0] for c in _FOLD_CASES]
+)
+def test_fold_crash_before_pointer_commit(
+    spark, tmp_path, prefix, run, read, kind
+):
+    """A crash between a snapshot write and its pointer commit leaves a
+    torn snapshot dir (no _SUCCESS on some table) with a HIGHER batch id
+    than the committed one. It must be invisible to the reader; the next
+    drain must converge to the answer of one clean drain over the same
+    files (that one-shot drain equals the batch operator — each fold's
+    own test above); and retention must sweep it, along with every
+    committed snapshot but the newest 3."""
+    import os
+
+    run, read = getattr(ingest, run), getattr(ingest, read)
+    landing = str(tmp_path / "landing")
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    os.makedirs(landing)
+
+    def land(i):
+        if kind == "turns":
+            _land(spark, {"landing": landing}, 25 * i, 25 * (i + 1), f"b{i}")
+        else:
+            _land_docs(spark, landing, 12 * i, 12 * (i + 1), f"b{i}")
+
+    for i in range(3):
+        land(i)
+        run(spark, landing, state, ckpt)
+        if i == 0:
+            oldest = ingest._snapshots(state)
+            assert len(oldest) == 1
+    before = _state_rows(read(spark, state))
+
+    torn_name = f"{prefix}-999999-deadbeef"
+    torn = os.path.join(state, torn_name)
+
+    def plant():
+        tables = ingest._FOLDS[prefix].tables
+        os.makedirs(os.path.join(torn, tables[0]))
+        with open(os.path.join(torn, tables[0], "part-00000.parquet"), "w") as f:
+            f.write("partial garbage")
+        if len(tables) > 1:  # first table finished, the rest never written
+            open(os.path.join(torn, tables[0], "_SUCCESS"), "w").close()
+
+    plant()
+    assert torn_name not in ingest._snapshots(state)
+    assert _state_rows(read(spark, state)) == before
+
+    land(3)
+    run(spark, landing, state, ckpt)
+    one_shot = str(tmp_path / "one_shot")
+    run(spark, landing, one_shot, str(tmp_path / "one_shot_ckpt"))
+    assert _state_rows(read(spark, state)) == _state_rows(read(spark, one_shot))
+
+    # the commit's retention swept the torn dir and the oldest snapshot
+    assert not os.path.exists(torn)
+    assert not os.path.exists(os.path.join(state, oldest[0]))
+    assert len(ingest._snapshots(state)) == 3
+
+    plant()
+    assert ingest.expire_snapshots(state) == [torn_name]
+    assert not os.path.exists(torn)
